@@ -629,8 +629,9 @@ def length_bucketed_batches(
 
     Scale shape: the global rank comes from :func:`~audit_star_spark.
     operators.ids.gapless_ids` — a range-partitioned sort on
-    (n_tokens, doc_id), per-partition local indexes, and a broadcast
-    cumulative-offset join (a bounded num_partitions-row collect). No
+    (n_tokens, doc_id), per-partition local indexes, and cumulative
+    offsets looked up by partition id in one array literal (from a
+    bounded num_partitions-row collect). No
     partition-less ``row_number`` window, so no Exchange
     SinglePartition: every stage stays as parallel as the sort.
     Deterministic across engines and cluster sizes: lengths are exact
@@ -1113,8 +1114,8 @@ def packed_chunk_census(
     Scale shape: the global token offset of each document is an
     EXCLUSIVE prefix sum in doc_id order via
     :func:`~audit_star_spark.operators.ids.prefix_sums` — the
-    gapless-ids two-pass scheme (per-partition sums -> broadcast bases
-    + within-partition running sum), so mode='distributed' has no
+    gapless-ids two-pass scheme (per-partition sums -> array-literal
+    bases + within-partition running sum), so mode='distributed' has no
     Exchange SinglePartition and no corpus-sized window partition. Each
     document then explodes into the ceil(n/seq_len)+1 chunk ids it
     overlaps (bounded per doc) and ONE groupBy(chunk_id) folds the

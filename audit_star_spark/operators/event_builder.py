@@ -55,37 +55,23 @@ def _pk_from(image: Column, pk_col: str | None) -> Column:
     return F.when(map_key_present(image, pk_col), map_lookup(image, pk_col))
 
 
-def build_audit_events(
-    feed: DataFrame,
+def audit_projection(
+    columns: list[str],
     pk_col: str | None,
-    order_by: list[str],
     truncate_len: int = 500,
     sparse_every: int = 1000,
     log_client_query: bool = False,
     client_query_truncate_len: int = 1000,
-    id_mode: str = "distributed",
-    id_start: int = 1,
     store_insert_payload: bool = False,
-) -> DataFrame:
-    """feed columns: op ('I'/'U'/'D'/'T'), before map<str,str>, after
-    map<str,str>, changed_at timestamp, plus optional metadata columns
-    changed_by / db_user / client_addr / client_port / client_query.
-    ``order_by`` must totally order the feed (ingest order).
-
-    ``store_insert_payload=True`` is a documented UPGRADE over the
-    reference: INSERT events store the full after-image in ``change``
-    (the reference stores nothing for I, audit.go:892–895, which is why
-    its views must join the live table to reconstruct inserted rows).
-    With the payload stored, the current table state is derivable from
-    the log alone — see ``operators.reconstruct.latest_state``. Default
-    False = faithful reference semantics."""
-    cols = set(feed.columns)
+) -> list[Column]:
+    """The select list that turns an id-numbered feed with ``columns``
+    into audit records (``AUDIT_COLUMNS``). Building it costs a py4j call
+    per expression node, so a caller that builds events every micro-batch
+    builds this once and passes it to :func:`build_audit_events`."""
+    cols = set(columns)
     op = F.col("op")
     before = F.col("before")
     after = F.col("after")
-
-    # Sequence first (operates on the narrow feed, before map algebra).
-    df = gapless_ids(feed, order_by=order_by, id_col="audit_id", start=id_start, mode=id_mode)
 
     before_change = (
         F.when(op == "U", truncate_values(map_diff(before, after), truncate_len))
@@ -111,7 +97,7 @@ def build_audit_events(
         else F.lit(None).cast("string")
     )
 
-    return df.select(
+    return [
         F.col("audit_id"),
         F.col("changed_at"),
         meta("changed_by", F.lit("default")).alias("changed_by"),
@@ -129,4 +115,52 @@ def build_audit_events(
         before_change.alias("before_change"),
         change.alias("change"),
         primary_key.alias("primary_key"),
+    ]
+
+
+def build_audit_events(
+    feed: DataFrame,
+    pk_col: str | None,
+    order_by: list[str],
+    truncate_len: int = 500,
+    sparse_every: int = 1000,
+    log_client_query: bool = False,
+    client_query_truncate_len: int = 1000,
+    id_mode: str = "distributed",
+    id_start: int = 1,
+    store_insert_payload: bool = False,
+    projection: list[Column] | None = None,
+    staged: list | None = None,
+) -> DataFrame:
+    """feed columns: op ('I'/'U'/'D'/'T'), before map<str,str>, after
+    map<str,str>, changed_at timestamp, plus optional metadata columns
+    changed_by / db_user / client_addr / client_port / client_query.
+    ``order_by`` must totally order the feed (ingest order).
+
+    ``store_insert_payload=True`` is a documented UPGRADE over the
+    reference: INSERT events store the full after-image in ``change``
+    (the reference stores nothing for I, audit.go:892–895, which is why
+    its views must join the live table to reconstruct inserted rows).
+    With the payload stored, the current table state is derivable from
+    the log alone — see ``operators.reconstruct.latest_state``. Default
+    False = faithful reference semantics.
+
+    ``projection``: a prebuilt :func:`audit_projection` for this feed's
+    columns and options; when given, the record options above are not
+    read again. ``staged``: receives the id pass's persisted staging
+    frame (see :func:`~audit_star_spark.operators.ids.gapless_ids`)."""
+    # Sequence first (operates on the narrow feed, before map algebra).
+    df = gapless_ids(
+        feed, order_by=order_by, id_col="audit_id", start=id_start, mode=id_mode, staged=staged
     )
+    if projection is None:
+        projection = audit_projection(
+            feed.columns,
+            pk_col,
+            truncate_len=truncate_len,
+            sparse_every=sparse_every,
+            log_client_query=log_client_query,
+            client_query_truncate_len=client_query_truncate_len,
+            store_insert_payload=store_insert_payload,
+        )
+    return df.select(*projection)

@@ -12,8 +12,16 @@ two-pass zipWithIndex scheme, kept entirely JVM-side:
 2. count rows per partition (tiny metadata collect) -> cumulative bases;
 3. local row index = ``monotonically_increasing_id() - (pid << 33)``
    (mid is defined as ``pid * 2^33 + row-index-in-partition``), so
-   ``id = base[pid] + local_index`` — a narrow projection + broadcast
-   join, no shuffle, no Python workers, stays in whole-stage codegen.
+   ``id = base[pid] + local_index``, with ``base[pid]`` looked up in ONE
+   array literal (``element_at(array(b0, b1, ...), pid + 1)``) — a narrow
+   projection: no join, no broadcast, no Python workers. The array folds
+   to a single literal that generated code references rather than
+   inlines, so a new set of bases reuses the compiled class.
+
+The staged frame of pass 1 is persisted. A caller that passes a
+``staged`` list receives it there and unpersists it after consuming the
+result, so a capture micro-batch leaves nothing cached; otherwise it
+stays cached for the session.
 
 Determinism: with a *total* order key (unique tie-breaker) the ids equal
 ``row_number() over (order by key)`` exactly, independent of partition
@@ -22,12 +30,36 @@ boundaries or cluster size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from audit_star_spark.util import qcol
 
 _MID_PARTITION_SHIFT = 33  # monotonically_increasing_id: pid * 2^33 + local
+
+
+def _stage(df: DataFrame, staged: list | None) -> DataFrame:
+    """Persist the range-partitioned staging frame: the per-partition
+    metadata job (pass 1) and the output job (pass 2) must observe the SAME
+    partitions and row order. At real scale this would be a write to
+    scratch storage; persist suffices."""
+    df = df.persist()
+    if staged is not None:
+        staged.append(df)
+    return df
+
+
+def _base_lookup(per_partition: dict, num_partitions: int, start: int) -> Column:
+    """``base[__pid]``: the exclusive running total of ``per_partition``
+    (pid -> count or sum) from ``start``, as one array literal indexed by
+    the partition id. Every pid below ``num_partitions`` gets an entry
+    (empty partitions included), so the lookup never falls off the end."""
+    bases, acc = [], start
+    for pid in range(num_partitions):
+        bases.append(acc)
+        acc += int(per_partition.get(pid, 0))
+    table = F.array(*map(F.lit, bases)).cast("array<bigint>")
+    return F.element_at(table, F.col("__pid") + 1)
 
 
 def gapless_ids(
@@ -37,6 +69,7 @@ def gapless_ids(
     start: int = 1,
     mode: str = "distributed",
     num_partitions: int | None = None,
+    staged: list | None = None,
 ) -> DataFrame:
     """Assign a gapless, monotone id following the total order ``order_by``.
 
@@ -46,40 +79,29 @@ def gapless_ids(
     mode='distributed' (default): two-pass JVM scheme above — no global
     funnel, scales with partition count.
     mode='window': single global window; only for small inputs/tests.
+
+    ``staged``: receives the persisted staging frame, for the caller to
+    unpersist after consuming the result.
     """
     if mode == "window":
         w = Window.orderBy(*[qcol(c) for c in order_by])
         return df.withColumn(id_col, F.row_number().over(w) + F.lit(start - 1))
 
-    spark = df.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    part = (
+    num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    part = _stage(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn("__mid", F.monotonically_increasing_id()),
+        staged,
     )
-    # Freeze the staged partitioning: the count job (pass 1) and the id job
-    # (pass 2) must observe the SAME partitions and row order. At real
-    # scale this would be a write to scratch storage; persist suffices.
-    part = part.persist()
-
     counts = {
         r["__pid"]: r["cnt"]
         for r in part.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
     }
-    bases, acc = [], start
-    for pid in sorted(counts):
-        bases.append((pid, acc))
-        acc += counts[pid]
-    offsets = spark.createDataFrame(bases or [(0, start)], "__pid int, __base long")
-
+    base = _base_lookup(counts, num_partitions, start)
     local_idx = F.col("__mid") - F.shiftleft(F.col("__pid").cast("long"), _MID_PARTITION_SHIFT)
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(id_col, F.col("__base") + local_idx)
-        .drop("__pid", "__mid", "__base")
-    )
+    return part.withColumn(id_col, base + local_idx).drop("__pid", "__mid")
 
 
 def prefix_sums(
@@ -89,6 +111,7 @@ def prefix_sums(
     out: str = "offset",
     mode: str = "distributed",
     num_partitions: int | None = None,
+    staged: list | None = None,
 ) -> DataFrame:
     """EXCLUSIVE prefix sum of ``value_col`` along the total order
     ``order_by`` (row's offset = sum of all strictly-earlier values) —
@@ -103,7 +126,8 @@ def prefix_sums(
     Determinism: with a total ``order_by`` the result equals
     ``sum(value) over (order by ... rows between unbounded preceding
     and 1 preceding)`` exactly — integer values only (float prefix
-    sums would depend on fold order)."""
+    sums would depend on fold order). ``staged`` as in
+    :func:`gapless_ids`."""
     if mode == "window":
         w = (
             Window.orderBy(*[qcol(c) for c in order_by])
@@ -113,33 +137,24 @@ def prefix_sums(
             out, F.coalesce(F.sum(value_col).over(w), F.lit(0)).cast("long")
         )
 
-    spark = df.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    part = (
+    num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    part = _stage(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
-        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__pid", F.spark_partition_id()),
+        staged,
     )
-    part = part.persist()
     sums = {
         r["__pid"]: r["s"]
         for r in part.groupBy("__pid")
         .agg(F.coalesce(F.sum(value_col), F.lit(0)).alias("s"))
         .collect()
     }  # bounded: one row per partition
-    bases, acc = [], 0
-    for pid in sorted(sums):
-        bases.append((pid, acc))
-        acc += int(sums[pid])
-    offsets = spark.createDataFrame(bases or [(0, 0)], "__pid int, __base long")
+    base = _base_lookup(sums, num_partitions, 0)
     wl = (
         Window.partitionBy("__pid")
         .orderBy(*[qcol(c) for c in order_by])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = F.coalesce(F.sum(value_col).over(wl), F.lit(0))
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(out, (F.col("__base") + local).cast("long"))
-        .drop("__pid", "__base")
-    )
+    return part.withColumn(out, (base + local).cast("long")).drop("__pid")

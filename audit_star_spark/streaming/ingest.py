@@ -29,10 +29,11 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from audit_star_spark.operators import event_builder
 from audit_star_spark.plans.append_guard import AppendOnlyGuard
 
 FEED_SCHEMA = T.StructType(
@@ -46,6 +47,18 @@ FEED_SCHEMA = T.StructType(
         T.StructField("db_user", T.StringType()),
         T.StructField("client_addr", T.StringType()),
         T.StructField("client_port", T.IntegerType()),
+    ]
+)
+
+
+# one LatestStateStore version: read with this schema, never inferred
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("primary_key", T.StringType()),
+        T.StructField("row", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("last_event_id", T.LongType()),
+        T.StructField("updated_at", T.TimestampType()),
+        T.StructField("deleted", T.BooleanType()),
     ]
 )
 
@@ -149,7 +162,7 @@ class LatestStateStore:
         v = self.current_version()
         if v is None:
             return None, {"truncate_watermark": None}
-        return spark.read.parquet(self._vpath(v)), self._meta(v)
+        return spark.read.schema(STATE_SCHEMA).parquet(self._vpath(v)), self._meta(v)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Current snapshot: (primary_key, row map, last_event_id,
@@ -183,9 +196,17 @@ class LatestStateStore:
             )
             .filter(F.col("primary_key").isNotNull())
         )
-        # statement-level truncate: driver-side scalar (one tiny agg per
-        # micro-batch — control flow, not data flow)
-        last_t = batch.filter(F.col("op") == "T").agg(F.max("event_id")).collect()[0][0]
+        # statement-level truncate: driver-side scalar (control flow, not
+        # data flow). A top-1 is taken per partition and merged on the
+        # driver: one job, where a global max would add a shuffle stage.
+        newest_t = (
+            batch.filter(F.col("op") == "T")
+            .select("event_id")
+            .orderBy(F.col("event_id").desc())
+            .limit(1)
+            .collect()
+        )
+        last_t = newest_t[0][0] if newest_t else None
         prev, meta = self._read_raw(spark)
         watermark = max(
             (v for v in (meta["truncate_watermark"], last_t) if v is not None),
@@ -263,43 +284,58 @@ class AuditIngest:
         self.state_store = (
             LatestStateStore(state_dir) if state_dir and pk_col else None
         )
+        # the audit-record select list, built once: rebuilding its lambdas
+        # and when-chains every micro-batch costs a py4j round trip per
+        # expression node
+        self.projection = event_builder.audit_projection(
+            FEED_SCHEMA.fieldNames(), pk_col, log_client_query=log_client_query
+        )
         # post-batch hooks (provision re-registers views here so their
         # live side re-resolves to the newest state snapshot)
         self.on_batch: list = []
         self.query = None
 
     def _append_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from audit_star_spark.operators.event_builder import build_audit_events
-
         base, seen = self.state.base_for_batch(batch_id)
         batch = batch.persist()
-        n = batch.count()
-        if n == 0:
-            batch.unpersist()
-            return
-        # A12: active append-only enforcement — refuse to extend a log
-        # that shows update/delete evidence; the replayed batch's own
-        # directory is the one sanctioned rewrite (idempotent replay)
-        self.guard.verify(ignore_prefix=f"__batch={batch_id}")
-        events = build_audit_events(
-            batch,
-            pk_col=self.pk_col,
-            order_by=["event_id"],
-            log_client_query=self.log_client_query,
-            id_start=base,
-        ).withColumn("__batch", F.lit(batch_id))
-        # partition by batch id: a replayed batch overwrites exactly its own
-        # directory (dynamic overwrite) => idempotent append
-        (
-            events.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(self.log_dir)
-        )
-        self.guard.update()
-        if self.state_store is not None:
-            self.state_store.apply_batch(self.spark, batch, batch_id, self.pk_col)
-        batch.unpersist()
+        staged: list[DataFrame] = []  # the id pass's cached staging frame
+        try:
+            # A12: active append-only enforcement — refuse to extend a log
+            # that shows update/delete evidence; the replayed batch's own
+            # directory is the one sanctioned rewrite (idempotent replay)
+            self.guard.verify(ignore_prefix=f"__batch={batch_id}")
+            events = event_builder.build_audit_events(
+                batch,
+                pk_col=self.pk_col,
+                order_by=["event_id"],
+                id_start=base,
+                projection=self.projection,
+                staged=staged,
+            )
+            # the log write counts its rows as a side effect (no count job)
+            written = Observation()
+            # partition by batch id: a replayed batch overwrites exactly its
+            # own directory (dynamic overwrite) => idempotent append. The id
+            # goes in as a string literal, which generated code references
+            # instead of inlining, so every batch reuses one compiled class
+            # (directory name and inferred int type are unchanged).
+            (
+                events.observe(written, F.count(F.lit(1)).alias("rows"))
+                .withColumn("__batch", F.lit(str(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__batch")
+                .parquet(self.log_dir)
+            )
+            n = written.get["rows"]
+            if n == 0:
+                return  # an empty batch writes no file: nothing to record
+            self.guard.update()
+            if self.state_store is not None:
+                self.state_store.apply_batch(self.spark, batch, batch_id, self.pk_col)
+        finally:
+            for df in (batch, *staged):
+                df.unpersist()
         if not seen:
             self.state.commit_batch(batch_id, base, n)
         for cb in self.on_batch:

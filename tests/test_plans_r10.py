@@ -20,7 +20,7 @@ def _plan(df) -> str:
 
 def test_length_bucketed_batches_no_single_partition_exchange(spark, docs):
     """The global rank comes from gapless_ids (range partition +
-    per-partition index + broadcast offsets) — a partition-less
+    per-partition index + array-literal offsets) — a partition-less
     row_number window would show as Exchange SinglePartition and
     serialize the whole corpus through one task at scale."""
     from audit_star_spark.analytics.text import length_bucketed_batches

@@ -72,6 +72,41 @@ def test_prefix_sums_modes_agree(spark):
     assert got_w == want
 
 
+def _ids_by_mode(df, **kw):
+    from audit_star_spark.operators.ids import gapless_ids
+
+    return [
+        {r["doc_id"]: r["audit_id"] for r in gapless_ids(df, ["doc_id"], mode=m, **kw).collect()}
+        for m in ("distributed", "window")
+    ]
+
+
+def test_gapless_ids_modes_agree(spark):
+    # start != 1 over many partitions
+    df = spark.createDataFrame([(i * 7 % 500,) for i in range(500)], "doc_id long").repartition(8)
+    got_d, got_w = _ids_by_mode(df, start=1001)
+    assert got_d == got_w == {i: 1001 + i for i in range(500)}
+    # more partitions than rows: empty partitions still get a base
+    few = spark.createDataFrame([(30,), (10,), (20,)], "doc_id long")
+    got_d, got_w = _ids_by_mode(few, start=5, num_partitions=8)
+    assert got_d == got_w == {10: 5, 20: 6, 30: 7}
+    # empty input
+    empty = spark.createDataFrame([], "doc_id long")
+    got_d, got_w = _ids_by_mode(empty)
+    assert got_d == got_w == {}
+
+
+def test_base_lookup_covers_empty_middle_and_trailing_partitions(spark):
+    from pyspark.sql import functions as F
+
+    from audit_star_spark.operators.ids import _base_lookup
+
+    pids = spark.range(6).select(F.col("id").cast("int").alias("__pid"))
+    base = _base_lookup({0: 2, 3: 4}, num_partitions=6, start=10)
+    got = [r["b"] for r in pids.select(base.alias("b")).orderBy("__pid").collect()]
+    assert got == [10, 12, 12, 12, 16, 16]
+
+
 def test_packed_chunk_census_invariants(spark):
     from audit_star_spark.analytics.text import packed_chunk_census
 
