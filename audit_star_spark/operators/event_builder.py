@@ -67,7 +67,8 @@ def audit_projection(
     """The select list that turns an id-numbered feed with ``columns``
     into audit records (``AUDIT_COLUMNS``). Building it costs a py4j call
     per expression node, so a caller that builds events every micro-batch
-    builds this once and passes it to :func:`build_audit_events`."""
+    builds this once and applies it to each batch's :func:`gapless_ids`
+    output."""
     cols = set(columns)
     op = F.col("op")
     before = F.col("before")
@@ -129,8 +130,6 @@ def build_audit_events(
     id_mode: str = "distributed",
     id_start: int = 1,
     store_insert_payload: bool = False,
-    projection: list[Column] | None = None,
-    staged: list | None = None,
 ) -> DataFrame:
     """feed columns: op ('I'/'U'/'D'/'T'), before map<str,str>, after
     map<str,str>, changed_at timestamp, plus optional metadata columns
@@ -143,18 +142,11 @@ def build_audit_events(
     its views must join the live table to reconstruct inserted rows).
     With the payload stored, the current table state is derivable from
     the log alone — see ``operators.reconstruct.latest_state``. Default
-    False = faithful reference semantics.
-
-    ``projection``: a prebuilt :func:`audit_projection` for this feed's
-    columns and options; when given, the record options above are not
-    read again. ``staged``: receives the id pass's persisted staging
-    frame (see :func:`~audit_star_spark.operators.ids.gapless_ids`)."""
+    False = faithful reference semantics."""
     # Sequence first (operates on the narrow feed, before map algebra).
-    df = gapless_ids(
-        feed, order_by=order_by, id_col="audit_id", start=id_start, mode=id_mode, staged=staged
-    )
-    if projection is None:
-        projection = audit_projection(
+    df = gapless_ids(feed, order_by=order_by, id_col="audit_id", start=id_start, mode=id_mode)
+    return df.select(
+        *audit_projection(
             feed.columns,
             pk_col,
             truncate_len=truncate_len,
@@ -163,4 +155,4 @@ def build_audit_events(
             client_query_truncate_len=client_query_truncate_len,
             store_insert_payload=store_insert_payload,
         )
-    return df.select(*projection)
+    )

@@ -18,10 +18,11 @@ two-pass zipWithIndex scheme, kept entirely JVM-side:
    to a single literal that generated code references rather than
    inlines, so a new set of bases reuses the compiled class.
 
-The staged frame of pass 1 is persisted. A caller that passes a
-``staged`` list receives it there and unpersists it after consuming the
-result, so a capture micro-batch leaves nothing cached; otherwise it
-stays cached for the session.
+The staged frame of pass 1 is persisted. A caller of ``gapless_ids``
+that passes a ``staged`` list receives it there and unpersists it after
+consuming the result, so a capture micro-batch leaves nothing cached;
+otherwise (and always for ``prefix_sums``) it stays cached for the
+session.
 
 Determinism: with a *total* order key (unique tie-breaker) the ids equal
 ``row_number() over (order by key)`` exactly, independent of partition
@@ -111,7 +112,6 @@ def prefix_sums(
     out: str = "offset",
     mode: str = "distributed",
     num_partitions: int | None = None,
-    staged: list | None = None,
 ) -> DataFrame:
     """EXCLUSIVE prefix sum of ``value_col`` along the total order
     ``order_by`` (row's offset = sum of all strictly-earlier values) —
@@ -126,8 +126,7 @@ def prefix_sums(
     Determinism: with a total ``order_by`` the result equals
     ``sum(value) over (order by ... rows between unbounded preceding
     and 1 preceding)`` exactly — integer values only (float prefix
-    sums would depend on fold order). ``staged`` as in
-    :func:`gapless_ids`."""
+    sums would depend on fold order)."""
     if mode == "window":
         w = (
             Window.orderBy(*[qcol(c) for c in order_by])
@@ -142,7 +141,7 @@ def prefix_sums(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id()),
-        staged,
+        None,
     )
     sums = {
         r["__pid"]: r["s"]

@@ -29,7 +29,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -196,17 +196,9 @@ class LatestStateStore:
             )
             .filter(F.col("primary_key").isNotNull())
         )
-        # statement-level truncate: driver-side scalar (control flow, not
-        # data flow). A top-1 is taken per partition and merged on the
-        # driver: one job, where a global max would add a shuffle stage.
-        newest_t = (
-            batch.filter(F.col("op") == "T")
-            .select("event_id")
-            .orderBy(F.col("event_id").desc())
-            .limit(1)
-            .collect()
-        )
-        last_t = newest_t[0][0] if newest_t else None
+        # statement-level truncate: driver-side scalar (one tiny agg per
+        # micro-batch — control flow, not data flow)
+        last_t = batch.filter(F.col("op") == "T").agg(F.max("event_id")).collect()[0][0]
         prev, meta = self._read_raw(spark)
         watermark = max(
             (v for v in (meta["truncate_watermark"], last_t) if v is not None),
@@ -298,38 +290,31 @@ class AuditIngest:
     def _append_batch(self, batch: DataFrame, batch_id: int) -> None:
         base, seen = self.state.base_for_batch(batch_id)
         batch = batch.persist()
+        n = batch.count()
+        if n == 0:
+            batch.unpersist()
+            return
         staged: list[DataFrame] = []  # the id pass's cached staging frame
         try:
             # A12: active append-only enforcement — refuse to extend a log
             # that shows update/delete evidence; the replayed batch's own
             # directory is the one sanctioned rewrite (idempotent replay)
             self.guard.verify(ignore_prefix=f"__batch={batch_id}")
-            events = event_builder.build_audit_events(
-                batch,
-                pk_col=self.pk_col,
-                order_by=["event_id"],
-                id_start=base,
-                projection=self.projection,
-                staged=staged,
-            )
-            # the log write counts its rows as a side effect (no count job)
-            written = Observation()
+            events = event_builder.gapless_ids(
+                batch, order_by=["event_id"], id_col="audit_id", start=base, staged=staged
+            ).select(*self.projection)
             # partition by batch id: a replayed batch overwrites exactly its
             # own directory (dynamic overwrite) => idempotent append. The id
             # goes in as a string literal, which generated code references
             # instead of inlining, so every batch reuses one compiled class
             # (directory name and inferred int type are unchanged).
             (
-                events.observe(written, F.count(F.lit(1)).alias("rows"))
-                .withColumn("__batch", F.lit(str(batch_id)))
+                events.withColumn("__batch", F.lit(str(batch_id)))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("__batch")
                 .parquet(self.log_dir)
             )
-            n = written.get["rows"]
-            if n == 0:
-                return  # an empty batch writes no file: nothing to record
             self.guard.update()
             if self.state_store is not None:
                 self.state_store.apply_batch(self.spark, batch, batch_id, self.pk_col)
