@@ -17,9 +17,8 @@ Deterministic hashing: md5-hex (identical across engines); minhash_j(doc)
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -84,27 +83,29 @@ def _shingled(docs: DataFrame) -> DataFrame:
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id + minhash_0..k-1 (universal-hash minima over shingle hashes)
     + LSH band keys. Carries only the 60-bit shingle hashes, never the
-    shingle strings — signatures are persisted and self-joined downstream,
+    shingle strings — signatures are checkpointed and self-joined downstream,
     and long arrays shuffle ~5x lighter than 3-word string arrays."""
-    out = _shingled(docs).drop("shingles")
-    for j in range(N_PERMS):
-        out = out.withColumn(
-            f"mh_{j}",
+    mh = _shingled(docs).select(
+        "doc_id",
+        "shash",
+        *[
             F.array_min(
                 F.expr(f"transform(shash, h -> ({MH_A[j]} * h + {MH_B[j]}) % {MH_P})")
-            ),
-        )
+            ).alias(f"mh_{j}")
+            for j in range(N_PERMS)
+        ],
+    )
+    # F.concat (not concat_ws): NULL minhashes (empty shingle sets) must
+    # propagate to a NULL band key, not collapse into a shared bucket
+    bands = []
     for b in range(N_BANDS):
-        cols = [f"mh_{j}" for j in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]
-        # F.concat (not concat_ws): NULL minhashes (empty shingle sets) must
-        # propagate to a NULL band key, not collapse into a shared bucket
         parts: list[F.Column] = []
-        for i, c in enumerate(cols):
-            if i:
+        for j in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND):
+            if parts:
                 parts.append(F.lit("|"))
-            parts.append(F.col(c).cast("string"))
-        out = out.withColumn(f"band_{b}", F.md5(F.concat(*parts)))
-    return out
+            parts.append(F.col(f"mh_{j}").cast("string"))
+        bands.append(F.md5(F.concat(*parts)).alias(f"band_{b}"))
+    return mh.select("*", *bands)
 
 
 def minhash_lsh_pairs(
@@ -128,15 +129,14 @@ def minhash_lsh_pairs(
     members verify against the anchor (the star keeps the component
     connected and transitivity does the rest — see the bucket-cap test).
     Default None = exact pair semantics, required by the gate oracle."""
-    # persist: the band union reads sig N_BANDS times and the candidate
-    # self-join doubles it again — without this the md5-heavy signature
-    # pipeline runs ~6x (at real scale: write signatures to storage once)
-    sig = minhash_signatures(docs).persist()
-    bands = [
-        sig.select("doc_id", F.lit(b).alias("band"), F.col(f"band_{b}").alias("key"))
-        for b in range(N_BANDS)
-    ]
-    buckets = reduce(lambda a, b: a.unionByName(b), bands).filter(F.col("key").isNotNull())
+    # lazy localCheckpoint (not persist): the buckets and the verification
+    # sets both read sig, and the candidate self-join reads the buckets
+    # twice — without a materialization barrier the md5-heavy signature
+    # pipeline runs several times. The blocks are built once on the first
+    # action and released with the frame instead of leaking into the
+    # session cache (at real scale: write signatures to storage once)
+    sig = minhash_signatures(docs).localCheckpoint(eager=False)
+    buckets = _band_buckets(sig)
     if max_bucket is not None:
         # bucket stats shuffle on the SAME (band, key) the join uses —
         # co-partitioned, no extra exchange pattern at scale
@@ -166,11 +166,13 @@ def minhash_lsh_pairs(
     )
     if star is not None:
         cand = cand.unionByName(star).distinct()
-    sets = sig.select("doc_id", F.array_distinct("shash").alias("sset"))
-    j = (
-        cand.join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sset", "set_a"), "doc_a")
-        .join(sets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sset", "set_b"), "doc_b")
+    sets_a = sig.select(
+        F.col("doc_id").alias("doc_a"), F.array_distinct("shash").alias("set_a")
     )
+    sets_b = sig.select(
+        F.col("doc_id").alias("doc_b"), F.array_distinct("shash").alias("set_b")
+    )
+    j = cand.join(sets_a, "doc_a").join(sets_b, "doc_b")
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     jacc = inter.cast("double") / union
@@ -606,8 +608,17 @@ def dedup_clusters(
                         parent[rb] = ra
                     else:
                         parent[ra] = rb
-            labels = [(v, find(v)) for v in parent]
-            return spark.createDataFrame(labels, "doc_id long, cluster_id long")
+            # an Arrow table, not a list of tuples: a pickled local relation
+            # costs its consumer a Python worker round trip
+            nodes = list(parent)
+            return spark.createDataFrame(
+                pa.table(
+                    {
+                        "doc_id": pa.array(nodes, pa.int64()),
+                        "cluster_id": pa.array([find(v) for v in nodes], pa.int64()),
+                    }
+                )
+            )
     # distributed path: derive from the already-cached probe projection
     # when one exists so the pairs pipeline is never executed again
     base = edges_df if driver_cc_max_edges else pairs.select("doc_a", "doc_b")
@@ -1213,13 +1224,15 @@ def dedup_keep_canonical(docs: DataFrame) -> DataFrame:
 
 
 def _band_buckets(sig: DataFrame) -> DataFrame:
-    bands = [
-        sig.select("doc_id", F.lit(b).alias("band"), F.col(f"band_{b}").alias("key"))
-        for b in range(N_BANDS)
-    ]
-    return reduce(lambda a, b: a.unionByName(b), bands).filter(
-        F.col("key").isNotNull()
+    """(doc_id, band, key) per non-NULL band key of ``sig``, exploded in
+    one projection (a chained unionByName would re-analyze sig per band)."""
+    rows = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("key"))
+            for b in range(N_BANDS)
+        ]
     )
+    return sig.select("doc_id", F.inline(rows)).filter(F.col("key").isNotNull())
 
 
 def cross_corpus_near_dups(

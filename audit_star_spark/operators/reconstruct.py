@@ -62,10 +62,14 @@ def _reconstruct_base(
                      when the table has no valid single-column PK (reference
                      emits a NULL literal then, audit.go:1083/1290/1399).
     """
+    # "the nearest LATER row" as the last row of a frame that grows from
+    # the newest version down: Spark evaluates an unbounded-preceding frame
+    # incrementally, O(n) per key, where rowsBetween(1, unboundedFollowing)
+    # + first() re-scans the rest of the partition for every row (O(n^2))
     w = (
         Window.partitionBy("primary_key")
-        .orderBy("audit_id")
-        .rowsBetween(1, Window.unboundedFollowing)
+        .orderBy(F.col("audit_id").desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
     # one SELECT with every per-column window expression: identical window
     # specs collapse into a single physical Window node over a single
@@ -74,7 +78,7 @@ def _reconstruct_base(
     for c, t in spec.columns:
         present = F.map_contains_key(F.col("before_change"), F.lit(c))
         tagged = F.when(present, F.struct(F.element_at("before_change", F.lit(c)).alias("v")))
-        nb = F.first(tagged, ignorenulls=True).over(w).getField("v").cast(t)
+        nb = F.last(tagged, ignorenulls=True).over(w).getField("v").cast(t)
         # NULL-pk events never match the correlated subquery in the
         # reference (NULL = NULL is not true); mirror that.
         nb_cols.append(

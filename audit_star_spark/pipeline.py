@@ -12,7 +12,9 @@ corpus_io.export_jsonl) — the pipeline only composes and materializes.
 Scale notes: stage boundaries are materialized (persist for the
 stage-count scalars, parquet writes for the outputs) — at 100 TB each
 boundary would be a storage write anyway, and the counts the report
-needs are partial-aggregated scalars, not data collects.
+needs are partial-aggregated scalars, not data collects. ``n_chunks`` is
+an ``Observation`` on the chunks write itself: the written file is never
+read back to count it.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -205,10 +207,11 @@ def run_corpus_pipeline(
 
     # 4. training layouts + export (all from the SAME survivor set)
     chunks = chunk_documents(clean, chunk_tokens=chunk_tokens, overlap=overlap)
-    chunks.write.mode("overwrite").parquet(os.path.join(out_dir, "chunks.parquet"))
-    stats["n_chunks"] = spark.read.parquet(
-        os.path.join(out_dir, "chunks.parquet")
-    ).count()
+    written = Observation()
+    chunks.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "chunks.parquet"))
+    stats["n_chunks"] = written.get["n"]
 
     packing = sequence_packing(clean, budget_tokens=budget_tokens)
     packing.write.mode("overwrite").parquet(os.path.join(out_dir, "packing.parquet"))

@@ -134,11 +134,13 @@ class StreamingNearDup:
             raise
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
-        from audit_star_spark.analytics.dedup import N_BANDS, minhash_signatures
+        from audit_star_spark.analytics.dedup import (
+            N_BANDS,
+            _band_buckets,
+            minhash_signatures,
+        )
 
         spark = batch_df.sparkSession
         sig_cols = ["doc_id", "shash"] + [f"band_{b}" for b in range(N_BANDS)]
@@ -172,16 +174,7 @@ class StreamingNearDup:
             )
 
         def buckets(sig, tag):
-            bands = [
-                sig.select(
-                    "doc_id", F.lit(b).alias("band"), F.col(f"band_{b}").alias("key")
-                )
-                for b in range(N_BANDS)
-            ]
-            out = reduce(lambda a, b: a.unionByName(b), bands)
-            return out.filter(F.col("key").isNotNull()).withColumn(
-                "is_new", F.lit(tag)
-            )
+            return _band_buckets(sig).withColumn("is_new", F.lit(tag))
 
         all_buckets = buckets(new_sig, True)
         if prev is not None:

@@ -78,3 +78,39 @@ def test_cross_corpus_pairs_never_mix_sides(spark):
     got_n = {(min(x, y), max(x, y)) for x, y in got}
     assert got_n == want
     assert len(got_n) > 0
+
+
+def test_short_docs_have_null_band_keys_and_never_pair(spark):
+    """Docs with fewer than 3 tokens have no shingles, so every band key
+    is NULL; they must pair with nobody (an empty-set "Jaccard" is 0/0 =
+    NaN, which Spark orders above every threshold). A 3-token doc has one
+    shingle and pairs normally. Same output with and without the bucket
+    cap."""
+    from audit_star_spark.analytics.dedup import N_BANDS, minhash_signatures
+
+    long_a = " ".join(f"w{i}" for i in range(40))
+    long_b = " ".join(f"v{i}" for i in range(25))
+    rows = [
+        (1, long_a), (2, long_a),
+        (3, long_b), (4, long_b.upper()),
+        (5, "one two three"), (6, "one two three"),
+        (10, "a b"), (11, "a b"), (12, "a"), (13, ""), (14, "w0 w1"),
+        (15, "  one   two  "),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    bands = [f"band_{b}" for b in range(N_BANDS)]
+    short = {
+        r["doc_id"]: [r[c] for c in bands]
+        for r in minhash_signatures(docs).collect()
+        if r["doc_id"] >= 10
+    }
+    assert short == {i: [None] * N_BANDS for i in (10, 11, 12, 13, 14, 15)}
+
+    want = {(1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)}
+    for cap in (None, 1, 2):
+        got = {
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in minhash_lsh_pairs(docs, threshold=0.7, max_bucket=cap).collect()
+        }
+        assert got == want, cap

@@ -237,3 +237,24 @@ def test_pipeline_substring_engines_agree(spark, tmp_path):
             spark, src, str(tmp_path / "bad"), substring_k=8,
             substring_engine="nope",
         )
+
+
+def test_pipeline_leaves_session_cache_empty(spark, tmp_path):
+    """Every stage frame the pipeline caches is released by the time it
+    returns: after calls on two different inputs the session's cache
+    holds nothing (a leaked entry would also serve a later call on the
+    same path from stale data)."""
+    from tests.conftest import SF_DIR
+
+    from audit_star_spark.pipeline import run_corpus_pipeline
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests share this session
+    assert cache.isEmpty()
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    for k, lo in enumerate((0, 200)):
+        src = str(tmp_path / f"in{k}.parquet")
+        docs.filter(F.col("doc_id") >= lo).orderBy("doc_id").limit(60).write.parquet(src)
+        stats = run_corpus_pipeline(spark, src, str(tmp_path / f"out{k}"), shards=1)
+        assert stats["n_after_near_dedup"] > 0
+    assert cache.isEmpty()

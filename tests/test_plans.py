@@ -45,10 +45,13 @@ def test_reconstruction_window_carries_all_columns(spark):
     log, live, spec = cached_users_log(spark, SF_DIR)
     plan = _plan(delta_view(log, live, spec))
     window_nodes = [ln for ln in plan.splitlines() if "+- Window [" in ln]
-    reconstruction = [ln for ln in window_nodes if "unboundedfollowing" in ln]
+    # the growing frame (newest version down to the row before this one)
+    reconstruction = [
+        ln for ln in window_nodes if "unboundedpreceding$(), -1)" in ln
+    ]
     assert len(reconstruction) == 1, window_nodes
     # all four user-table columns resolved inside that one node
-    assert reconstruction[0].count("first(") == len(spec.columns)
+    assert reconstruction[0].count("last(") == len(spec.columns)
 
 
 def test_filter_and_column_pushdown_reach_parquet_scan(spark):
